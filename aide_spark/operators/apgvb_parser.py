@@ -23,6 +23,9 @@ accepts everything, matching the plain window scan.
 
 from __future__ import annotations
 
+import functools
+from types import SimpleNamespace
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -64,25 +67,13 @@ def _clean_numeric_last(before: Column) -> Column:
     return F.try_element_at(clean, F.lit(-1)).cast("double")
 
 
-def transactions(lines: DataFrame) -> DataFrame:
-    """(doc_id, page, off, line) → TRANSACTIONS_OUT rows for APGVB docs."""
+@functools.cache
+def _txn_exprs() -> SimpleNamespace:
+    """Column expressions of :func:`transactions`: they depend only on
+    column names and constants, so they are built once per process."""
     line = F.col("line")
     is_start = ~_skip(line) & line.rlike(START_RE)
     w_page = Window.partitionBy("doc_id", "page").orderBy("off")
-
-    df = (
-        lines.withColumn("idx", F.row_number().over(w_page) - 1)  # reference's i
-        .withColumn(
-            "cands",
-            F.array(
-                line,
-                F.lead("line", 1).over(w_page),
-                F.lead("line", 2).over(w_page),
-                F.lead("line", 3).over(w_page),
-            ),
-        )
-        .where(is_start)
-    )
 
     # first candidate line carrying both the balance pattern and a clean
     # amount before it (apgvb:833-854: skip empty/'---', else continue);
@@ -103,54 +94,40 @@ def transactions(lines: DataFrame) -> DataFrame:
         ),
         F.lit(1),
     )
-    df = df.withColumn("hit_idx", hit_idx).withColumn(
-        "hit", F.try_element_at("cands", F.col("hit_idx") + 1)
-    )
 
     # lookahead CONSUMPTION (apgvb:696 `i += offset+1`): per-page fold over
     # start candidates in line order — accept a start only if its line index
     # is past the previous accepted start's consumed range
-    keep = (
-        df.groupBy("doc_id", "page")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("idx"), F.col("hit_idx"), F.col("off")))
-            ).alias("ss")
+    starts = F.array_sort(
+        F.collect_list(F.struct(F.col("idx"), F.col("hit_idx"), F.col("off")))
+    ).alias("ss")
+    kept_offs = F.explode(
+        F.aggregate(
+            "ss",
+            F.struct(
+                F.lit(0).alias("nxt"),
+                F.array().cast("array<int>").alias("keep"),
+            ),
+            lambda acc, s: F.when(
+                (s["idx"] >= acc["nxt"]) & s["hit_idx"].isNotNull(),
+                F.struct(
+                    (s["idx"] + s["hit_idx"] + 1).alias("nxt"),
+                    F.concat(acc["keep"], F.array(s["off"])).alias("keep"),
+                ),
+            ).otherwise(acc),
+            lambda acc: acc["keep"],
         )
-        .select(
-            "doc_id",
-            F.explode(
-                F.aggregate(
-                    "ss",
-                    F.struct(
-                        F.lit(0).alias("nxt"),
-                        F.array().cast("array<int>").alias("keep"),
-                    ),
-                    lambda acc, s: F.when(
-                        (s["idx"] >= acc["nxt"]) & s["hit_idx"].isNotNull(),
-                        F.struct(
-                            (s["idx"] + s["hit_idx"] + 1).alias("nxt"),
-                            F.concat(acc["keep"], F.array(s["off"])).alias("keep"),
-                        ),
-                    ).otherwise(acc),
-                    lambda acc: acc["keep"],
-                )
-            ).alias("off"),
-        )
-    )
+    ).alias("off")
 
     before = py_strip(F.element_at(F.split(F.col("hit"), BAL_RE), 1))
-    parsed = (
-        df.where(F.col("hit").isNotNull())
-        .join(keep, ["doc_id", "off"], "left_semi")
-        .withColumn(
-            "bal_num",
-            F.regexp_replace(F.regexp_extract("hit", BAL_CAP_RE, 1), ",", "").cast("double"),
-        )
-        .withColumn("amt_num", _clean_numeric_last(before))
-        .withColumn("Date", F.regexp_extract("line", START_RE, 1))
-        .withColumn("after_dates", py_strip(F.regexp_extract("line", START_RE, 3)))
-    )
+    fields = {
+        "bal_num": F.regexp_replace(
+            F.regexp_extract("hit", BAL_CAP_RE, 1), ",", ""
+        ).cast("double"),
+        "amt_num": _clean_numeric_last(before),
+        "Date": F.regexp_extract("line", START_RE, 1),
+        "after_dates": py_strip(F.regexp_extract("line", START_RE, 3)),
+    }
 
     # balance-change classification — the lag window (P10)
     w_doc = Window.partitionBy("doc_id").orderBy("off")
@@ -166,31 +143,70 @@ def transactions(lines: DataFrame) -> DataFrame:
     # str(float) display form — Spark's double→string cast matches Python's
     # shortest round-trip repr for this value range (quirk, SURVEY.md §2.4)
     amt_str = F.col("amt_num").cast("string")
-    out = (
-        parsed.withColumn("Transaction_Type", txn_type)
-        .withColumn("Remarks", remarks)
-        .withColumn(
-            "Debit", F.when(txn_type == "Debit", amt_str).otherwise(F.lit(""))
-        )
-        .withColumn(
-            "Credit", F.when(txn_type == "Credit", amt_str).otherwise(F.lit(""))
-        )
-        .withColumn("Balance", F.col("bal_num").cast("string"))
-        .withColumn("Page_Number", F.col("page").cast("int"))
-        .withColumn(
-            "order", F.row_number().over(Window.partitionBy("doc_id").orderBy("off")).cast("int")
-        )
-        .withColumn("S_No", F.col("order").cast("string"))  # continuous across pages (apgvb:597-613)
+    return SimpleNamespace(
+        idx=F.row_number().over(w_page) - 1,  # reference's i
+        cands=F.array(
+            line,
+            F.lead("line", 1).over(w_page),
+            F.lead("line", 2).over(w_page),
+            F.lead("line", 3).over(w_page),
+        ),
+        is_start=is_start,
+        hit_idx=hit_idx,
+        hit=F.try_element_at("cands", F.col("hit_idx") + 1),
+        starts=starts,
+        kept_offs=kept_offs,
+        has_hit=F.col("hit").isNotNull(),
+        fields=fields,
+        txn_type=txn_type,
+        remarks=remarks,
+        debit=F.when(txn_type == "Debit", amt_str).otherwise(F.lit("")),
+        credit=F.when(txn_type == "Credit", amt_str).otherwise(F.lit("")),
+        display={
+            "Balance": F.col("bal_num").cast("string"),
+            "Page_Number": F.col("page").cast("int"),
+        },
+        order=F.row_number().over(Window.partitionBy("doc_id").orderBy("off")).cast("int"),
+        s_no=F.col("order").cast("string"),  # continuous across pages (apgvb:597-613)
+        out=(
+            "doc_id", "order", "S_No", "Date",
+            F.lit("").alias("Transaction_ID"),
+            "Remarks",
+            F.lit(None).cast("string").alias("Amount"),
+            "Debit", "Credit", "Balance",
+            F.lit(None).cast("double").alias("Amount_Numeric"),
+            F.lit(None).cast("double").alias("Balance_Numeric"),
+            "Transaction_Type", "Page_Number",
+        ),
     )
-    return out.select(
-        "doc_id", "order", "S_No", "Date",
-        F.lit("").alias("Transaction_ID"),
-        "Remarks",
-        F.lit(None).cast("string").alias("Amount"),
-        "Debit", "Credit", "Balance",
-        F.lit(None).cast("double").alias("Amount_Numeric"),
-        F.lit(None).cast("double").alias("Balance_Numeric"),
-        "Transaction_Type", "Page_Number",
+
+
+def transactions(lines: DataFrame) -> DataFrame:
+    """(doc_id, page, off, line) → TRANSACTIONS_OUT rows for APGVB docs.
+
+    One projection per dependency level; each column carrying a window
+    function stays its own step."""
+    e = _txn_exprs()
+    df = (
+        lines.withColumn("idx", e.idx)
+        .withColumn("cands", e.cands)
+        .where(e.is_start)
+        .withColumn("hit_idx", e.hit_idx)
+        .withColumn("hit", e.hit)
+    )
+    keep = df.groupBy("doc_id", "page").agg(e.starts).select("doc_id", e.kept_offs)
+    return (
+        df.where(e.has_hit)
+        .join(keep, ["doc_id", "off"], "left_semi")
+        .withColumns(e.fields)
+        .withColumn("Transaction_Type", e.txn_type)
+        .withColumn("Remarks", e.remarks)
+        .withColumn("Debit", e.debit)
+        .withColumn("Credit", e.credit)
+        .withColumns(e.display)
+        .withColumn("order", e.order)
+        .withColumn("S_No", e.s_no)
+        .select(*e.out)
     )
 
 
@@ -198,6 +214,12 @@ def metadata(head_lines: DataFrame) -> DataFrame:
     """Per-doc metadata from the first two pages (apgvb:440-551);
     ``head_lines`` is the materialized (doc_id, arr) from
     ``lines.head_lines_table(two_pages=True)``."""
+    return head_lines.select("doc_id", _metadata_col())
+
+
+@functools.cache
+def _metadata_col() -> Column:
+    """The metadata struct of :func:`metadata`, built once per process."""
     arr = F.col("arr")
 
     def last_extract(cond, pat: str, group: int = 1) -> Column:
@@ -265,7 +287,7 @@ def metadata(head_lines: DataFrame) -> DataFrame:
         F.lit(None).cast("string").alias("address"),
         opening.alias("opening_balance"),
     )
-    return head_lines.select("doc_id", meta.alias("metadata"))
+    return meta.alias("metadata")
 
 
 def _nz(c: Column) -> Column:
@@ -276,11 +298,24 @@ def summary(txns: DataFrame, meta: DataFrame) -> DataFrame:
     """A1-A6 (apgvb:954-1042): opening from metadata (default 0.0), closing
     from the last transaction's Balance string, totals from the Debit/Credit
     strings, net = credits - debits, lexicographic string date min/max."""
+    aggs, opening, totals = _summary_exprs()
+    return (
+        txns.groupBy("doc_id").agg(*aggs)
+        .join(meta.select("doc_id", opening), "doc_id", "left")
+        .withColumns(totals)
+        .drop("_opening")
+    )
+
+
+@functools.cache
+def _summary_exprs() -> tuple[tuple[Column, ...], Column, dict[str, Column]]:
+    """(aggregates, metadata opening balance, derived totals) of
+    :func:`summary`, built once per process."""
     num = lambda c: F.coalesce(  # noqa: E731
         F.when(F.col(c) != "", F.regexp_replace(F.col(c), ",", "").cast("double")), F.lit(0.0)
     )
     last_bal = F.max_by(F.col("Balance"), F.col("order"))
-    agg = txns.groupBy("doc_id").agg(
+    aggs = (
         F.coalesce(
             F.when(last_bal != "", F.regexp_replace(last_bal, ",", "").cast("double")),
             F.lit(0.0),
@@ -291,15 +326,8 @@ def summary(txns: DataFrame, meta: DataFrame) -> DataFrame:
         F.min(F.when(F.col("Date") != "", F.col("Date"))).alias("from_date"),
         F.max(F.when(F.col("Date") != "", F.col("Date"))).alias("to_date"),
     )
-    return (
-        agg.join(
-            meta.select(
-                "doc_id", F.col("metadata.opening_balance").alias("_opening")
-            ),
-            "doc_id",
-            "left",
-        )
-        .withColumn("opening_balance", F.coalesce(F.col("_opening"), F.lit(0.0)))
-        .withColumn("net_change", F.col("total_credits") - F.col("total_debits"))
-        .drop("_opening")
-    )
+    totals = {
+        "opening_balance": F.coalesce(F.col("_opening"), F.lit(0.0)),
+        "net_change": F.col("total_credits") - F.col("total_debits"),
+    }
+    return aggs, F.col("metadata.opening_balance").alias("_opening"), totals

@@ -17,6 +17,9 @@ Distinctive semantics vs Union:
 
 from __future__ import annotations
 
+import functools
+from types import SimpleNamespace
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -35,8 +38,10 @@ def _is_header(line: Column) -> Column:
     return cond
 
 
-def transactions(lines: DataFrame) -> DataFrame:
-    """(doc_id, page, off, line) → TRANSACTIONS_OUT rows for Canara docs."""
+@functools.cache
+def _txn_exprs() -> SimpleNamespace:
+    """Column expressions of :func:`transactions`: they depend only on
+    column names and constants, so they are built once per process."""
     line = F.col("line")
     is_start = (
         ~_is_header(line)
@@ -44,12 +49,6 @@ def transactions(lines: DataFrame) -> DataFrame:
         & line.rlike(DATE_RE)
     )
     w_page = Window.partitionBy("doc_id", "page").orderBy("off")
-    # the raw next line on the page — reference's lines[i+1] (canara:280-281)
-    df = (
-        lines.withColumn("next_line", F.coalesce(F.lead("line", 1).over(w_page), F.lit("")))
-        .withColumn("seg", F.sum(is_start.cast("int")).over(w_page))
-        .where(F.col("seg") >= 1)
-    )
 
     # combine (canara:262-291): non-empty lines from the start up to and
     # including the FIRST 'Chq:' line of the segment.
@@ -60,20 +59,14 @@ def transactions(lines: DataFrame) -> DataFrame:
     )
     include = (line != "") & (chq_before == 0)
     is_chq = line.startswith("Chq:") & (chq_before == 0)
-    seg_rows = df.withColumn(
-        "part", F.when(include, F.struct("off", "line"))
-    ).withColumn(
-        # amounts line = raw line after the first Chq: line (canara:278-282)
-        "amt_line", F.when(is_chq, F.col("next_line"))
-    )
-    segs = seg_rows.groupBy("doc_id", "page", "seg").agg(
+    seg_aggs = (
         F.array_join(
             F.array_sort(F.collect_list("part")).getField("line"), " "
         ).alias("combined"),
         # '' when no Chq: was found before the segment ended
         F.coalesce(F.max("amt_line"), F.lit("")).alias("amounts_line"),
         F.min("off").alias("start_off"),
-    ).withColumnRenamed("page", "pg")
+    )
 
     combined = F.col("combined")
     date = F.element_at(F.split(combined, r"\s+"), 1)
@@ -101,38 +94,65 @@ def transactions(lines: DataFrame) -> DataFrame:
 
     txn_type = F.when(combined.contains("/DR/"), F.lit("Debit")).otherwise(F.lit("Credit"))
     particulars = py_strip(F.expr("substring(combined, length(split(combined, '\\\\s+')[0]) + 2)"))
-
-    out = (
-        segs.where(valid_date)
-        .withColumn("Date", date)
-        .withColumn("Remarks", particulars)
-        .withColumn("Transaction_Type", txn_type)
-        .withColumn("Debit", F.when(txn_type == "Debit", amount_str).otherwise(F.lit("")))
-        .withColumn("Credit", F.when(txn_type == "Credit", amount_str).otherwise(F.lit("")))
-        .withColumn("Balance", balance_str)
-        .withColumn("Page_Number", F.col("pg").cast("int"))
-        .withColumn(
-            "S_No",  # serial restarts per page (canara:221)
-            F.row_number()
-            .over(Window.partitionBy("doc_id", "pg").orderBy("start_off"))
-            .cast("string"),
-        )
-        .withColumn(
-            "order",
-            F.row_number()
-            .over(Window.partitionBy("doc_id").orderBy("start_off"))
-            .cast("int"),
-        )
+    return SimpleNamespace(
+        # the raw next line on the page — reference's lines[i+1] (canara:280-281)
+        next_line=F.coalesce(F.lead("line", 1).over(w_page), F.lit("")),
+        seg=F.sum(is_start.cast("int")).over(w_page),
+        in_seg=F.col("seg") >= 1,
+        part=F.when(include, F.struct("off", "line")),
+        # amounts line = raw line after the first Chq: line (canara:278-282)
+        amt_line=F.when(is_chq, F.col("next_line")),
+        seg_aggs=seg_aggs,
+        valid_date=valid_date,
+        fields={
+            "Date": date,
+            "Remarks": particulars,
+            "Transaction_Type": txn_type,
+            "Debit": F.when(txn_type == "Debit", amount_str).otherwise(F.lit("")),
+            "Credit": F.when(txn_type == "Credit", amount_str).otherwise(F.lit("")),
+            "Balance": balance_str,
+            "Page_Number": F.col("pg").cast("int"),
+        },
+        s_no=F.row_number()  # serial restarts per page (canara:221)
+        .over(Window.partitionBy("doc_id", "pg").orderBy("start_off"))
+        .cast("string"),
+        order=F.row_number()
+        .over(Window.partitionBy("doc_id").orderBy("start_off"))
+        .cast("int"),
+        out=(
+            "doc_id", "order", "S_No", "Date",
+            F.lit(None).cast("string").alias("Transaction_ID"),
+            "Remarks",
+            F.lit(None).cast("string").alias("Amount"),
+            "Debit", "Credit", "Balance",
+            F.lit(None).cast("double").alias("Amount_Numeric"),
+            F.lit(None).cast("double").alias("Balance_Numeric"),
+            "Transaction_Type", "Page_Number",
+        ),
     )
-    return out.select(
-        "doc_id", "order", "S_No", "Date",
-        F.lit(None).cast("string").alias("Transaction_ID"),
-        "Remarks",
-        F.lit(None).cast("string").alias("Amount"),
-        "Debit", "Credit", "Balance",
-        F.lit(None).cast("double").alias("Amount_Numeric"),
-        F.lit(None).cast("double").alias("Balance_Numeric"),
-        "Transaction_Type", "Page_Number",
+
+
+def transactions(lines: DataFrame) -> DataFrame:
+    """(doc_id, page, off, line) → TRANSACTIONS_OUT rows for Canara docs.
+
+    One projection per dependency level; the windows stay their own steps."""
+    e = _txn_exprs()
+    segs = (
+        lines.withColumn("next_line", e.next_line)
+        .withColumn("seg", e.seg)
+        .where(e.in_seg)
+        .withColumn("part", e.part)
+        .withColumn("amt_line", e.amt_line)
+        .groupBy("doc_id", "page", "seg")
+        .agg(*e.seg_aggs)
+        .withColumnRenamed("page", "pg")
+    )
+    return (
+        segs.where(e.valid_date)
+        .withColumns(e.fields)
+        .withColumn("S_No", e.s_no)
+        .withColumn("order", e.order)
+        .select(*e.out)
     )
 
 
@@ -143,6 +163,12 @@ def _last_line(arr: Column, cond) -> Column:
 def metadata(head_lines: DataFrame) -> DataFrame:
     """Per-doc metadata from first-page lines (canara:100-184); ``head_lines``
     is the materialized (doc_id, arr) from ``lines.head_lines_table``."""
+    return head_lines.select("doc_id", _metadata_col())
+
+
+@functools.cache
+def _metadata_col() -> Column:
+    """The metadata struct of :func:`metadata`, built once per process."""
     arr = F.col("arr")
     idx = F.transform(arr, lambda l, i: F.struct(l.alias("l"), i.alias("i")))
 
@@ -208,7 +234,7 @@ def metadata(head_lines: DataFrame) -> DataFrame:
         address.alias("address"),
         F.lit(None).cast("double").alias("opening_balance"),
     )
-    return head_lines.select("doc_id", meta.alias("metadata"))
+    return meta.alias("metadata")
 
 
 def _nz(c: Column) -> Column:
@@ -234,6 +260,19 @@ def summary(txns: DataFrame) -> DataFrame:
     """A1-A6 (canara:380-421). Sort by parsed date (stable ⇒ secondary key =
     input order); opening = balance of the LATEST-dated txn, closing =
     EARLIEST (inverted on purpose); totals from the Debit/Credit strings."""
+    keys, aggs, net_change = _summary_exprs()
+    return (
+        txns.withColumns(keys)
+        .groupBy("doc_id")
+        .agg(*aggs)
+        .withColumn("net_change", net_change)
+    )
+
+
+@functools.cache
+def _summary_exprs() -> tuple[dict[str, Column], tuple[Column, ...], Column]:
+    """(sort keys, aggregates, net_change) of :func:`summary`, built once
+    per process."""
     parsed_date = F.to_date("Date", "dd-MM-yyyy")
     key = F.struct(parsed_date.alias("d"), F.col("order").alias("o"))
     num = lambda c: F.coalesce(  # noqa: E731
@@ -241,17 +280,13 @@ def summary(txns: DataFrame) -> DataFrame:
     )
     bal = F.when(F.col("Balance") != "", F.regexp_replace(F.col("Balance"), ",", "")
                  .cast("double")).otherwise(F.lit(0.0))
-    df = txns.withColumn("_k", key).withColumn("_bal", bal)
-    return (
-        df.groupBy("doc_id")
-        .agg(
-            F.max_by("_bal", "_k").alias("opening_balance"),
-            F.min_by("_bal", "_k").alias("closing_balance"),
-            F.sum(num("Debit")).alias("total_debits"),
-            F.sum(num("Credit")).alias("total_credits"),
-            F.count(F.lit(1)).alias("transaction_count"),
-            F.min("Date").alias("from_date"),
-            F.max("Date").alias("to_date"),
-        )
-        .withColumn("net_change", F.col("total_credits") - F.col("total_debits"))
+    aggs = (
+        F.max_by("_bal", "_k").alias("opening_balance"),
+        F.min_by("_bal", "_k").alias("closing_balance"),
+        F.sum(num("Debit")).alias("total_debits"),
+        F.sum(num("Credit")).alias("total_credits"),
+        F.count(F.lit(1)).alias("transaction_count"),
+        F.min("Date").alias("from_date"),
+        F.max("Date").alias("to_date"),
     )
+    return {"_k": key, "_bal": bal}, aggs, F.col("total_credits") - F.col("total_debits")

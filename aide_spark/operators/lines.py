@@ -17,6 +17,9 @@ pipeline incurs exactly ONE shuffle for the line table.
 
 from __future__ import annotations
 
+import functools
+from types import SimpleNamespace
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -99,6 +102,29 @@ def media_in_first_pages(spans: Column, n_pages: int = 5) -> Column:
     )
 
 
+@functools.cache
+def _line_exprs() -> SimpleNamespace:
+    """Column expressions of :func:`line_table`: they depend only on column
+    names and constants, so they are built once per process."""
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    is_break = (F.col("s.kind") == "text") & (F.col("s.text") == PAGE_BREAK)
+    return SimpleNamespace(
+        exploded=F.posexplode("spans").alias("pos", "s"),
+        page=(
+            F.lit(1)
+            + F.coalesce(
+                F.sum(is_break.cast("int")).over(
+                    w.rowsBetween(Window.unboundedPreceding, -1)
+                ),
+                F.lit(0),
+            )
+        ).cast("int"),
+        is_line=(F.col("s.kind") == "text") & ~is_break,
+        off=F.col("s.offset").alias("off"),
+        line=py_strip(F.col("s.text")).alias("line"),
+    )
+
+
 def line_table(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """Explode documents into ``(doc_id, page, off, line)`` (+ ``carry``
     columns, e.g. the routing dimension ``bank_id``).
@@ -107,30 +133,39 @@ def line_table(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     is 1-based. Page-break markers and media spans are dropped — parsers see
     the same stripped line stream the reference iterates.
     """
-    spans = docs.select("doc_id", *carry, F.posexplode("spans").alias("pos", "s"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    is_break = (F.col("s.kind") == "text") & (F.col("s.text") == PAGE_BREAK)
+    e = _line_exprs()
     return (
-        spans.withColumn(
-            "page",
-            (
-                F.lit(1)
-                + F.coalesce(
-                    F.sum(is_break.cast("int")).over(
-                        w.rowsBetween(Window.unboundedPreceding, -1)
-                    ),
-                    F.lit(0),
-                )
-            ).cast("int"),
-        )
-        .where((F.col("s.kind") == "text") & ~is_break)
-        .select(
-            "doc_id",
-            *carry,
-            "page",
-            F.col("s.offset").alias("off"),
-            py_strip(F.col("s.text")).alias("line"),
-        )
+        docs.select("doc_id", *carry, e.exploded)
+        .withColumn("page", e.page)
+        .where(e.is_line)
+        .select("doc_id", *carry, "page", e.off, e.line)
+    )
+
+
+@functools.cache
+def _head_lines_exprs(two_pages: bool) -> tuple[Column, Column, Column]:
+    """The three staged columns of :func:`head_lines_frame`, built once per
+    process for each ``two_pages`` value."""
+    pages = 2 if two_pages else 1
+    cut = F.col("_cut")
+    kept = F.filter(
+        F.col("spans"),
+        lambda s: (s["kind"] == "text")
+        & (s["text"] != PAGE_BREAK)
+        & (cut.isNull() | (s["offset"] < cut)),
+    )
+    arr = F.transform(F.col("_kept"), lambda s: py_strip(s["text"]))
+    if two_pages:
+        filled = F.concat(arr, F.array(F.lit("")))
+        default = F.array(F.lit(""), F.lit(""))
+    else:
+        filled = arr
+        default = F.array(F.lit(""))
+    final = F.when(F.size("_kept") > 0, filled).otherwise(default)
+    return (
+        F.explode(F.array(_nth_break_cut(F.col("spans"), pages))).alias("_cut"),
+        F.explode(F.array(kept)).alias("_kept"),
+        F.explode(F.array(final)).alias("arr"),
     )
 
 
@@ -164,29 +199,12 @@ def head_lines_frame(docs: DataFrame, two_pages: bool = False) -> DataFrame:
     CollapseProject inlines plain aliases into lambda bodies (the
     non-cheap-duplication guard does not see lambda-nested references).
     """
-    pages = 2 if two_pages else 1
-    staged = docs.select(
-        "doc_id",
-        "spans",
-        F.explode(F.array(_nth_break_cut(F.col("spans"), pages))).alias("_cut"),
+    cut, kept, final = _head_lines_exprs(two_pages)
+    return (
+        docs.select("doc_id", "spans", cut)
+        .select("doc_id", kept)
+        .select("doc_id", final)
     )
-    cut = F.col("_cut")
-    kept = F.filter(
-        F.col("spans"),
-        lambda s: (s["kind"] == "text")
-        & (s["text"] != PAGE_BREAK)
-        & (cut.isNull() | (s["offset"] < cut)),
-    )
-    staged = staged.select("doc_id", F.explode(F.array(kept)).alias("_kept"))
-    arr = F.transform(F.col("_kept"), lambda s: py_strip(s["text"]))
-    if two_pages:
-        filled = F.concat(arr, F.array(F.lit("")))
-        default = F.array(F.lit(""), F.lit(""))
-    else:
-        filled = arr
-        default = F.array(F.lit(""))
-    final = F.when(F.size("_kept") > 0, filled).otherwise(default)
-    return staged.select("doc_id", F.explode(F.array(final)).alias("arr"))
 
 
 def head_lines_table(lines: DataFrame, two_pages: bool = False) -> DataFrame:

@@ -20,6 +20,9 @@ doc_id-hash exchange for the windows (reused) and the final per-doc agg.
 
 from __future__ import annotations
 
+import functools
+from types import SimpleNamespace
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -32,15 +35,16 @@ NEXT_RE = r"^\d+\s+\d{1,2}/\d{1,2}/\d{4}"                      # union:294
 AMT_RE = r"(\d+\.?\d*)\s*\((Dr|Cr)\)"                          # union:287,317
 
 
-def transactions(lines: DataFrame) -> DataFrame:
-    """(doc_id, page, off, line) → TRANSACTIONS_OUT rows for Union docs."""
+@functools.cache
+def _txn_exprs() -> SimpleNamespace:
+    """Column expressions of :func:`transactions`: they depend only on
+    column names and constants, so they are built once per process."""
     # r6: stage the per-line regex probes ONCE behind a projection — built
     # inline, rlike(START_RE) was re-matched three times per line (segment
     # sum, stopper test, include test) and the amount extract once more;
     # staged columns are matched once and the windows read booleans
     is_start = F.col("_is_start")
-    staged = lines.select(
-        "*",
+    probes = (
         F.col("line").rlike(START_RE).alias("_is_start"),
         F.col("line").rlike(NEXT_RE).alias("_is_next"),
         F.size(F.regexp_extract_all(F.col("line"), F.lit(AMT_RE), 0)).alias(
@@ -48,9 +52,6 @@ def transactions(lines: DataFrame) -> DataFrame:
         ),
     )
     w_page = Window.partitionBy("doc_id", "page").orderBy("off")
-    df = staged.withColumn(
-        "seg", F.sum(is_start.cast("int")).over(w_page)
-    ).where(F.col("seg") >= 1)
 
     # combine loop (union:282-300): append following lines while the combined
     # text has <2 amount patterns, stopping at an empty line or the next
@@ -74,10 +75,7 @@ def transactions(lines: DataFrame) -> DataFrame:
         & (cum_empty == 0)
         & (cum_stop == 0)
     )
-    seg_rows = df.withColumn(
-        "part", F.when(include, F.struct("off", "line"))  # nulls dropped by collect_list
-    )
-    segs = seg_rows.groupBy("doc_id", "page", "seg").agg(
+    seg_aggs = (
         F.array_join(
             F.array_sort(F.collect_list("part")).getField("line"), " "
         ).alias("seg_text"),
@@ -87,16 +85,15 @@ def transactions(lines: DataFrame) -> DataFrame:
     seg_text = F.col("seg_text")
     vals = F.regexp_extract_all(seg_text, F.lit(AMT_RE), 1)
     typs = F.regexp_extract_all(seg_text, F.lit(AMT_RE), 2)
-    parsed = (
-        segs.where(F.size(vals) >= 2)  # union:320-321: need amount AND balance
-        .withColumn("S_No", F.regexp_extract(seg_text, START_RE, 1))
-        .withColumn("Date", F.regexp_extract(seg_text, START_RE, 2))
-        .withColumn("Transaction_ID", F.regexp_extract(seg_text, START_RE, 3))
-        .withColumn("amt_val", F.element_at(vals, 1))
-        .withColumn("amt_typ", F.element_at(typs, 1))
-        .withColumn("bal_val", F.element_at(vals, -1))
-        .withColumn("bal_typ", F.element_at(typs, -1))
-    )
+    fields = {
+        "S_No": F.regexp_extract(seg_text, START_RE, 1),
+        "Date": F.regexp_extract(seg_text, START_RE, 2),
+        "Transaction_ID": F.regexp_extract(seg_text, START_RE, 3),
+        "amt_val": F.element_at(vals, 1),
+        "amt_typ": F.element_at(typs, 1),
+        "bal_val": F.element_at(vals, -1),
+        "bal_typ": F.element_at(typs, -1),
+    }
 
     # remarks = line[find(txnid)+len(txnid) : find(f"{amt} ({typ})")] (union:327-330)
     # Python slice end is -1 (⇒ len-1) when the display string isn't found.
@@ -114,33 +111,57 @@ def transactions(lines: DataFrame) -> DataFrame:
 
     amt_num = F.col("amt_val").cast("double")
     bal_num = F.col("bal_val").cast("double")
-    out = (
-        parsed.withColumn("Remarks", remarks)
-        .withColumn(
-            "Amount_Numeric", F.when(F.col("amt_typ") == "Dr", -amt_num).otherwise(amt_num)
-        )
-        .withColumn(
-            "Balance_Numeric", F.when(F.col("bal_typ") == "Dr", -bal_num).otherwise(bal_num)
-        )
-        .withColumn("Amount", F.concat("amt_val", F.lit(" ("), "amt_typ", F.lit(")")))
-        .withColumn("Balance", F.concat("bal_val", F.lit(" ("), "bal_typ", F.lit(")")))
-        .withColumn(
-            "Transaction_Type",
-            F.when(F.col("amt_typ") == "Cr", F.lit("Credit")).otherwise(F.lit("Debit")),
-        )
-        .withColumn("Page_Number", F.col("page").cast("int"))
-        .withColumn(
-            "order",
-            F.row_number()
-            .over(Window.partitionBy("doc_id").orderBy("start_off"))
-            .cast("int"),
-        )
+    derived = {
+        "Remarks": remarks,
+        "Amount_Numeric": F.when(F.col("amt_typ") == "Dr", -amt_num).otherwise(amt_num),
+        "Balance_Numeric": F.when(F.col("bal_typ") == "Dr", -bal_num).otherwise(bal_num),
+        "Amount": F.concat("amt_val", F.lit(" ("), "amt_typ", F.lit(")")),
+        "Balance": F.concat("bal_val", F.lit(" ("), "bal_typ", F.lit(")")),
+        "Transaction_Type": F.when(F.col("amt_typ") == "Cr", F.lit("Credit")).otherwise(
+            F.lit("Debit")
+        ),
+        "Page_Number": F.col("page").cast("int"),
+    }
+    return SimpleNamespace(
+        probes=probes,
+        seg=F.sum(is_start.cast("int")).over(w_page),
+        in_seg=F.col("seg") >= 1,
+        part=F.when(include, F.struct("off", "line")),  # nulls dropped by collect_list
+        seg_aggs=seg_aggs,
+        has_amounts=F.size(vals) >= 2,  # union:320-321: need amount AND balance
+        fields=fields,
+        derived=derived,
+        order=F.row_number()
+        .over(Window.partitionBy("doc_id").orderBy("start_off"))
+        .cast("int"),
+        out=(
+            "doc_id", "order", "S_No", "Date", "Transaction_ID", "Remarks", "Amount",
+            F.lit(None).cast("string").alias("Debit"),
+            F.lit(None).cast("string").alias("Credit"),
+            "Balance", "Amount_Numeric", "Balance_Numeric", "Transaction_Type", "Page_Number",
+        ),
     )
-    return out.select(
-        "doc_id", "order", "S_No", "Date", "Transaction_ID", "Remarks", "Amount",
-        F.lit(None).cast("string").alias("Debit"),
-        F.lit(None).cast("string").alias("Credit"),
-        "Balance", "Amount_Numeric", "Balance_Numeric", "Transaction_Type", "Page_Number",
+
+
+def transactions(lines: DataFrame) -> DataFrame:
+    """(doc_id, page, off, line) → TRANSACTIONS_OUT rows for Union docs.
+
+    One projection per dependency level; the windows stay their own steps."""
+    e = _txn_exprs()
+    segs = (
+        lines.select("*", *e.probes)
+        .withColumn("seg", e.seg)
+        .where(e.in_seg)
+        .withColumn("part", e.part)
+        .groupBy("doc_id", "page", "seg")
+        .agg(*e.seg_aggs)
+    )
+    return (
+        segs.where(e.has_amounts)
+        .withColumns(e.fields)
+        .withColumns(e.derived)
+        .withColumn("order", e.order)
+        .select(*e.out)
     )
 
 
@@ -165,6 +186,12 @@ def metadata(head_lines: DataFrame) -> DataFrame:
     MATERIALIZED array, so the ~15 field probes traverse stored strings
     instead of re-deriving the page split per probe (CollapseProject would
     inline an expression-valued array into every consumer)."""
+    return head_lines.select("doc_id", _metadata_col())
+
+
+@functools.cache
+def _metadata_col() -> Column:
+    """The metadata struct of :func:`metadata`, built once per process."""
     arr = F.col("arr")
     idx = F.transform(arr, lambda l, i: F.struct(l.alias("l"), i.alias("i")))
 
@@ -276,7 +303,7 @@ def metadata(head_lines: DataFrame) -> DataFrame:
         address.alias("address"),
         F.lit(None).cast("double").alias("opening_balance"),
     )
-    return head_lines.select("doc_id", meta.alias("metadata"))
+    return meta.alias("metadata")
 
 
 def _nz(c: Column) -> Column:
@@ -287,7 +314,14 @@ def summary(txns: DataFrame) -> DataFrame:
     """A1-A6 per-doc aggregate (union:361-389). Quirks reproduced:
     opening = balance of the LAST listed txn, closing = FIRST listed;
     date_range is lexicographic string min/max."""
-    return txns.groupBy("doc_id").agg(
+    aggs, net_change = _summary_exprs()
+    return txns.groupBy("doc_id").agg(*aggs).withColumn("net_change", net_change)
+
+
+@functools.cache
+def _summary_exprs() -> tuple[tuple[Column, ...], Column]:
+    """(aggregates, net_change) of :func:`summary`, built once per process."""
+    aggs = (
         F.max_by("Balance_Numeric", "order").alias("opening_balance"),
         F.min_by("Balance_Numeric", "order").alias("closing_balance"),
         F.coalesce(
@@ -299,4 +333,5 @@ def summary(txns: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("transaction_count"),
         F.min("Date").alias("from_date"),
         F.max("Date").alias("to_date"),
-    ).withColumn("net_change", F.col("total_credits") + F.col("total_debits"))
+    )
+    return aggs, F.col("total_credits") + F.col("total_debits")

@@ -23,7 +23,9 @@ returns INVALID which only SCANNED short-circuits at :173-179).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..generator import CORRECT_PASSWORD
@@ -40,17 +42,13 @@ VALIDATION_COLS = [
 ]
 
 
-def with_validation(docs: DataFrame) -> DataFrame:
-    """docs + the six validation columns, computed in STAGED projections so
-    the heavy span-array expressions (page split, first-5-pages text, media
-    fold) are evaluated ONCE per doc. A single struct-valued when-ladder
-    would be copied into every consumer by Catalyst's
-    ``GetStructField(CreateNamedStruct)`` simplification — measured 18 page-
-    split evaluations per doc (~20% of pipeline CPU). Spark >=3.3 refuses to
-    collapse projections that would duplicate non-cheap expressions, so the
-    explicit staging below sticks; the fail-fast ``when`` ladders
-    (pdf_validator.py:44-73's cheapest-first predicate order) then run over
-    plain scalar columns."""
+@functools.cache
+def _validation_exprs(raw_bytes: bool) -> tuple[tuple[tuple[Column, ...], ...], tuple[Column, ...]]:
+    """(staged projections, ladder columns) of :func:`with_validation`.
+
+    They depend only on column names and constants, so they are built once
+    per process. ``raw_bytes`` (the input carries ``decode_status``)
+    selects the head of the ladder, so it is the cache key."""
     spans = F.col("spans")
     # r6: the stages are one-element explode (Generate) barriers, not plain
     # withColumns projections. The ``where(is_valid)`` consumers push their
@@ -60,45 +58,41 @@ def with_validation(docs: DataFrame) -> DataFrame:
     # ~4x per doc in every branch subtree. A filter cannot push through a
     # Generate whose output it references, so each stage is evaluated
     # exactly once per doc and the ladders read stored scalars.
-    staged = docs.select(
-        "*",
-        F.explode(
-            F.array(
-                F.struct(
-                    pages_col(spans).alias("p"),
-                    media_in_first_pages(spans, 5).alias("m"),
-                )
+    pm = F.explode(
+        F.array(
+            F.struct(
+                pages_col(spans).alias("p"),
+                media_in_first_pages(spans, 5).alias("m"),
             )
-        ).alias("_pm"),
-    ).select("*", F.col("_pm.p").alias("_pages"), F.col("_pm.m").alias("_media"))
+        )
+    ).alias("_pm")
     # total_text = ''.join(first 5 page texts); Python-strip()ped length
     text5 = F.array_join(F.slice("_pages", 1, 5), "")
-    staged = staged.select(
-        "*",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.when(F.size(spans) <= 0, F.lit(0))
-                    .otherwise(F.size("_pages"))
-                    .cast("int")
-                    .alias("pc"),
-                    F.length(F.regexp_replace(text5, r"^\s+|\s+$", ""))
-                    .cast("int")
-                    .alias("tl"),
-                )
+    ct = F.explode(
+        F.array(
+            F.struct(
+                F.when(F.size(spans) <= 0, F.lit(0))
+                .otherwise(F.size("_pages"))
+                .cast("int")
+                .alias("pc"),
+                F.length(F.regexp_replace(text5, r"^\s+|\s+$", ""))
+                .cast("int")
+                .alias("tl"),
             )
-        ).alias("_ct"),
-    ).select(
-        "*",
-        F.col("_ct.pc").alias("page_count"),
-        F.col("_ct.tl").alias("text_length"),
-    ).drop("_pm", "_ct")
+        )
+    ).alias("_ct")
+    stages = (
+        (pm,),
+        (F.col("_pm.p").alias("_pages"), F.col("_pm.m").alias("_media")),
+        (ct,),
+        (F.col("_ct.pc").alias("page_count"), F.col("_ct.tl").alias("text_length")),
+    )
 
     size_gate = (
         F.col("declared_size_mb") > MAX_FILE_SIZE_MB,
         False, "invalid", "FILE_TOO_LARGE", 0.0,
     )
-    if "decode_status" in docs.columns:
+    if raw_bytes:
         # raw-bytes path: the codec ALREADY attempted real decryption
         # (standard security handler + trimmed retry, pdf_codec.py) and
         # reports the outcome — quarantine on its status, not on the
@@ -141,14 +135,31 @@ def with_validation(docs: DataFrame) -> DataFrame:
             out = F.when(cond, val) if out is None else out.when(cond, val)
         return out.otherwise(F.lit(default))
 
-    return staged.withColumns(
-        {
-            "is_valid": ladder(lambda iv, pt, ec, cs: iv, True),
-            "pdf_type": ladder(lambda iv, pt, ec, cs: pt, "text"),
-            "error_code": ladder(lambda iv, pt, ec, cs: ec, "VALID"),
-            "confidence_score": ladder(lambda iv, pt, ec, cs: cs, 1.0),
-        }
-    ).drop("_pages", "_media")
+    ladders = (
+        ladder(lambda iv, pt, ec, cs: iv, True).alias("is_valid"),
+        ladder(lambda iv, pt, ec, cs: pt, "text").alias("pdf_type"),
+        ladder(lambda iv, pt, ec, cs: ec, "VALID").alias("error_code"),
+        ladder(lambda iv, pt, ec, cs: cs, 1.0).alias("confidence_score"),
+    )
+    return stages, ladders
+
+
+def with_validation(docs: DataFrame) -> DataFrame:
+    """docs + the six validation columns, computed in STAGED projections so
+    the heavy span-array expressions (page split, first-5-pages text, media
+    fold) are evaluated ONCE per doc. A single struct-valued when-ladder
+    would be copied into every consumer by Catalyst's
+    ``GetStructField(CreateNamedStruct)`` simplification — measured 18 page-
+    split evaluations per doc (~20% of pipeline CPU). Spark >=3.3 refuses to
+    collapse projections that would duplicate non-cheap expressions, so the
+    explicit staging (:func:`_validation_exprs`) sticks; the fail-fast
+    ``when`` ladders (pdf_validator.py:44-73's cheapest-first predicate
+    order) then run over plain scalar columns."""
+    stages, ladders = _validation_exprs("decode_status" in docs.columns)
+    staged = docs
+    for cols in stages:
+        staged = staged.select("*", *cols)
+    return staged.select(*docs.columns, "page_count", "text_length", *ladders)
 
 
 def validate(docs: DataFrame) -> DataFrame:

@@ -22,6 +22,8 @@ which absorbs summation-order last-bit differences between a distributed
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -71,7 +73,8 @@ SUMMARY_ORDER = [
 ]
 
 # ---------------------------------------------------------------------------
-# Spark-side expression builders
+# Spark-side expression builders. The three span-text columns depend only on
+# field names, so each is built once per process (functools.cache).
 # ---------------------------------------------------------------------------
 
 
@@ -160,12 +163,15 @@ def _kv_array(pairs: list[tuple[str, Column, str]]) -> Column:
     return F.array_compact(F.array(*_kv_items(pairs)))
 
 
-def meta_texts_col(meta: Column) -> Column:
-    """array<string> of meta-span texts from a METADATA struct column."""
+@functools.cache
+def meta_texts_col() -> Column:
+    """array<string> of meta-span texts from the ``metadata`` struct column."""
+    meta = F.col("metadata")
     return _kv_array([(k, meta.getField(f.split(".")[0]).getField(f.split(".")[1])
                        if "." in f else meta.getField(f), t) for k, f, t in META_ORDER])
 
 
+@functools.cache
 def txn_text_col() -> Column:
     """'|'-joined key=value text for one TRANSACTIONS_OUT row.
 
@@ -179,6 +185,7 @@ def txn_text_col() -> Column:
     return F.concat_ws("|", *_kv_items([(k, F.col(f), t) for k, f, t in TXN_ORDER]))
 
 
+@functools.cache
 def summary_text_col() -> Column:
     """'|'-joined key=value text for one SUMMARY row."""
     return F.concat_ws(

@@ -4,7 +4,10 @@ shuffle budget). These guard against regressions that only show at scale."""
 
 from __future__ import annotations
 
+import logging
+
 import pytest
+from pyspark.sql import functions as F
 
 from aide_spark.generator import local_corpus_df
 from aide_spark.operators.skew import explain_shuffles
@@ -428,3 +431,122 @@ def test_pipeline_release_frees_checkpoint_blocks(spark):
     assert spark.sparkContext._jsc.getPersistentRDDs().size() > baseline
     pipeline.release(out)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == baseline
+
+
+def test_pipeline_release_is_noop_without_persist(spark, caplog):
+    """A ``persist=False`` result has no checkpoint behind it: release frees
+    nothing and logs nothing."""
+    baseline = spark.sparkContext._jsc.getPersistentRDDs().size()
+    out = pipeline.run(local_corpus_df(spark, 24))
+    out["spans_out"].count()
+    with caplog.at_level(logging.DEBUG, logger="aide_spark"):
+        pipeline.release(out)
+    assert caplog.records == []
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == baseline
+
+
+def test_parse_all_non_numeric_shuffle_width(spark):
+    """Some platforms set ``spark.sql.shuffle.partitions`` to ``auto``.
+    ``parse_all(persist=True)`` then sizes its coalesce by the default
+    parallelism instead of failing on ``int()``. Open-source Spark refuses
+    ``auto`` at ``conf.set``, so the value goes straight into the session's
+    conf map, as such a platform holds it, together with the AQE initial
+    partition number that sizes Spark's own shuffles there. Both are
+    restored afterwards."""
+    key = "spark.sql.shuffle.partitions"
+    initial_key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    settings = spark._jsparkSession.sessionState().conf().settings()
+    saved = {k: settings.get(k) for k in (key, initial_key)}
+    try:
+        settings.put(key, "auto")
+        settings.put(initial_key, "4")
+        assert pipeline._shuffle_width(spark) == spark.sparkContext.defaultParallelism
+        _, valid, _ = pipeline.split_valid(local_corpus_df(spark, 24))
+        out = pipeline.parse_all(valid, persist=True)
+        assert out["summaries"].count() > 0
+        pipeline.release(out)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                settings.remove(k)
+            else:
+                settings.put(k, v)
+    assert spark.conf.get(key) == saved[key]
+    assert pipeline._shuffle_width(spark) == int(saved[key])
+
+
+# Driver-side construction budget of a warm pipeline.run(persist=True):
+# measured 0 Columns and 242 DataFrame.__init__ calls (each DataFrame op
+# makes two). The DataFrame bound has 16% headroom, not 20%, so that it
+# stays below the 294 of the unfolded withColumn chains.
+COLUMN_BUDGET = 0
+DATAFRAME_BUDGET = 280
+
+
+def test_pipeline_construction_budget(spark, monkeypatch):
+    """A warm ``pipeline.run`` issues only DataFrame ops: every Column
+    expression is built once per process. Before that rule, the second
+    ``pipeline.run(persist=True)`` of a session created 2,085 Columns and
+    294 DataFrames (``DataFrame.__init__`` calls). This pins the gain the
+    way the shuffle budgets pin Exchanges."""
+    from pyspark.sql.classic.column import Column
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    docs = local_corpus_df(spark, 24)
+    pipeline.release(pipeline.run(docs, persist=True))
+
+    counts = {"columns": 0, "dataframes": 0}
+    column_init, frame_init = Column.__init__, DataFrame.__init__
+
+    def count_column(self, *args, **kwargs):
+        counts["columns"] += 1
+        column_init(self, *args, **kwargs)
+
+    def count_frame(self, *args, **kwargs):
+        counts["dataframes"] += 1
+        frame_init(self, *args, **kwargs)
+
+    monkeypatch.setattr(Column, "__init__", count_column)
+    monkeypatch.setattr(DataFrame, "__init__", count_frame)
+    out = pipeline.run(docs, persist=True)
+    monkeypatch.undo()
+    pipeline.release(out)
+    assert counts["columns"] <= COLUMN_BUDGET, counts
+    assert counts["dataframes"] <= DATAFRAME_BUDGET, counts
+
+
+def test_cached_expressions_reuse_across_inputs(spark):
+    """The per-process expressions carry nothing from one input to the
+    next: runs over corpus A, then B, then A∪B in one session give, for
+    A∪B, exactly the union of the separate outputs."""
+    docs = local_corpus_df(spark, 72)
+    ids = sorted(r.doc_id for r in docs.select("doc_id").collect())
+    in_a = F.col("doc_id").isin(ids[::2])
+    a, b = docs.where(in_a), docs.where(~in_a)
+    outs = [pipeline.run(d, persist=True) for d in (a, b, a.unionByName(b))]
+    out_a, out_b, out_ab = outs
+    for key in ("spans_out", "quarantine"):
+        both = out_a[key].unionByName(out_b[key])
+        assert out_a[key].count() > 0 and out_b[key].count() > 0, key
+        assert out_ab[key].exceptAll(both).count() == 0, key
+        assert both.exceptAll(out_ab[key]).count() == 0, key
+    for out in outs:
+        pipeline.release(out)
+
+
+def test_with_validation_cache_keys_on_decode_status(spark):
+    """``with_validation`` builds its ladder once per branch: a frame with
+    ``decode_status`` after one without still gets the status-driven
+    error codes, and the fixture branch is unchanged after it."""
+    from aide_spark.operators.validation import with_validation
+
+    docs = local_corpus_df(spark, 36)
+
+    def codes(df):
+        return {r.doc_id: r.error_code for r in with_validation(df).collect()}
+
+    fixture = codes(docs)
+    assert "VALID" in fixture.values()
+    raw = codes(docs.withColumn("decode_status", F.lit("NOT_PDF")))
+    assert set(raw.values()) == {"NOT_PDF"}
+    assert codes(docs) == fixture
